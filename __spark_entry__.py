@@ -50,32 +50,24 @@ from _multi_source_retail_data_integration_hub_spark.plans import (  # noqa: E40
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
-# Round-12 window (the driver records the first ~50 registered queries
-# per round, against freshly regenerated testdata). Layout per the r11
-# verdict (ask #1/#2: rotate the r8-stale block in — this completes the
-# full registry refresh cycle, after which every query holds a driver
-# row ≤4 rounds old and registry growth may resume):
+# Window layout (the driver records the first ~50 registered queries
+# per round, against freshly regenerated testdata):
 #   1. q000_generation_fingerprint FIRST (red => the two engines compared
 #      different testdata generations; see CORRECTNESS_NOTES.md). The
 #      per-table guards q00c/d/e/l/o stay REGISTERED (incident
 #      diagnosis) but are pinned past the recorded window via
 #      _RETIRED_GUARDS.
-#   2. Queries NEW this round (q179+) — picked up automatically by
-#      _ordered()'s is-new check. New registrations land AFTER the
-#      rotation's 50 slots are safe (growth resumed post-refresh per
-#      the r11 verdict, but the r8-stale block gets the window first
-#      via _DEFER_TO_NEXT_WINDOW if needed).
-#   3. Backfill, oldest driver row first. Front of the list: the
-#      r8-stale block (q09-q13, q17-q19, q81-q84, q86-q87, q103,
-#      q111-q115, q117-q120, q128-q129, q139, q144-q150 — 34 queries,
-#      last scored r8, now the oldest rows), then the r9/r10/r11
-#      blocks. _BACKFILL lists EVERY non-guard query oldest-first, so
-#      future rounds rotate automatically as rows refresh.
+#   2. Queries with no driver row yet (q187+, none registered today) —
+#      picked up automatically by _ordered()'s is-new check; a late
+#      registration that must not displace the backfill goes in
+#      _DEFER_TO_NEXT_WINDOW.
+#   3. Backfill, oldest driver row first: _BACKFILL lists EVERY
+#      non-guard query in the order tools/regen_backfill.py derives
+#      from the committed CORRECTNESS_r*.json artifacts, so the window
+#      rotates as rows refresh.
 #   4. q997_generation_fingerprint_tail pinned LAST in the window — the
 #      byte-identical twin of q000, so head/tail disagreement proves a
 #      MID-window regeneration and agreement brackets the window.
-# All registered queries are green via ``tools/check_oracle.py`` on
-# current sf0.01 data (full local sweep; see SCALE.md for the r11 run).
 _WINDOW_SIZE = 50
 
 _GUARD_HEAD = [
@@ -104,61 +96,13 @@ _DEFER_TO_NEXT_WINDOW: list[str] = []
 
 # Backfill order once the guard + new blocks are placed: EVERY
 # non-guard query, keyed oldest-newest-driver-row first (computed from
-# CORRECTNESS_r01..r10), then ascending query number within a round.
+# CORRECTNESS_r*.json by tools/regen_backfill.py), then ascending query
+# number within a round.
 # Whatever misses the 50-slot window carries to the next round
 # unchanged — the list only needs regenerating when a round's artifact
 # lands (the leading stale block rotates to the back).
 _BACKFILL = [
-    # -- newest driver row: round 10 --
-    "q23_minhash_signatures",
-    "q24_lsh_candidates",
-    "q25_simhash",
-    "q26_cosine_topk",
-    "q37_cosine_neardup",
-    "q41_ivf_assign",
-    "q42_ann_ivf_topk",
-    "q47_top_terms",
-    "q52_customers_no_orders",
-    "q53_dup_clusters",
-    "q54_spend_deciles",
-    "q55_profile",
-    "q56_corpus_pipeline",
-    "q57_set_ops",
-    "q58_above_nation_avg",
-    "q64_revenue_by_nation",
-    "q65_shipping_priority",
-    "q66_pricing_summary",
-    "q67_grouping_sets",
-    "q68_forward_fill",
-    "q69_session_window_batch",
-    "q70_pii_scrub",
-    "q71_fuzzy_part_match",
-    "q72_lang_reservoir",
-    "q73_embedding_stats",
-    "q74_doc_chunking",
-    "q75_late_orders_semi",
-    "q76_spend_percentiles",
-    "q77_scd2_merge",
-    "q78_image_resize",
-    "q79_retention_cohorts",
-    "q80_minhash_accuracy",
-    "q116_neardup_keep_best",
-    "q134_lsh_subsplit",
-    "q135_cluster_split",
-    "q136_streaming_dedup",
-    "q137_bpe_merges",
-    "q174_tokenizer_fertility",
-    "q175_audience_overlap",
-    "q176_feature_corr",
-    "q177_mad_outliers",
-    "q178_semdedup_probe",
     # -- newest driver row: round 11 --
-    "q01_monthly_sales_trend",
-    "q02_category_share",
-    "q03_customer_segments",
-    "q04_segment_status_pivot",
-    "q05_weekday_analysis",
-    "q06_top_customers",
     "q07_catalog_stats",
     "q08_quarterly_yoy",
     "q27_lsh_buckets",
@@ -299,6 +243,55 @@ _BACKFILL = [
     "q184_persisted_ivf_topk",
     "q185_streaming_band_ingest",
     "q186_streaming_dedup_on_arrival",
+    # -- newest driver row: round 14 --
+    "q01_monthly_sales_trend",
+    "q02_category_share",
+    "q03_customer_segments",
+    "q04_segment_status_pivot",
+    "q05_weekday_analysis",
+    "q06_top_customers",
+    "q23_minhash_signatures",
+    "q24_lsh_candidates",
+    "q25_simhash",
+    "q26_cosine_topk",
+    "q37_cosine_neardup",
+    "q41_ivf_assign",
+    "q42_ann_ivf_topk",
+    "q47_top_terms",
+    "q52_customers_no_orders",
+    "q53_dup_clusters",
+    "q54_spend_deciles",
+    "q55_profile",
+    "q56_corpus_pipeline",
+    "q57_set_ops",
+    "q58_above_nation_avg",
+    "q64_revenue_by_nation",
+    "q65_shipping_priority",
+    "q66_pricing_summary",
+    "q67_grouping_sets",
+    "q68_forward_fill",
+    "q69_session_window_batch",
+    "q70_pii_scrub",
+    "q71_fuzzy_part_match",
+    "q72_lang_reservoir",
+    "q73_embedding_stats",
+    "q74_doc_chunking",
+    "q75_late_orders_semi",
+    "q76_spend_percentiles",
+    "q77_scd2_merge",
+    "q78_image_resize",
+    "q79_retention_cohorts",
+    "q80_minhash_accuracy",
+    "q116_neardup_keep_best",
+    "q134_lsh_subsplit",
+    "q135_cluster_split",
+    "q136_streaming_dedup",
+    "q137_bpe_merges",
+    "q174_tokenizer_fertility",
+    "q175_audience_overlap",
+    "q176_feature_corr",
+    "q177_mad_outliers",
+    "q178_semdedup_probe",
 ]
 
 

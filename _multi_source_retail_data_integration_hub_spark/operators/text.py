@@ -29,6 +29,8 @@ import warnings
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # ---------------------------------------------------------------------------
 # Tokenization / shingling
 # ---------------------------------------------------------------------------
@@ -1989,7 +1991,8 @@ def bpe_learn_merges(words: DataFrame, n_merges: int) -> DataFrame:
             ).first()[0]
         )
         rules.append((rank, a, b, cnt, n_after))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rules,
         "merge_rank long, pair_a string, pair_b string, "
         "pair_count long, n_symbols_after long",

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.testdata import load_table
 from .registry import query
 
@@ -871,7 +872,7 @@ def _drain_memory_sink(agg: DataFrame, label: str) -> DataFrame:
                 q.stop()
         snap = spark.table(name)
         rows = snap.collect()  # bounded by the caller's contract
-        return spark.createDataFrame(rows, snap.schema)
+        return local_frame(spark, rows, snap.schema)
     finally:
         spark.catalog.dropTempView(name)
 

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..operators import sampling
 from ..operators import text as T
 from ..operators.checkpointing import materialize
+from ..session import local_frame
 from ..sources.testdata import fan_out, load_table
 from .registry import ORACLE, query
 
@@ -1927,8 +1928,8 @@ def _bpe_rules(spark: SparkSession, sf_dir: str) -> list[tuple]:
 
 @query("q137_bpe_merges", oracle=_bpe_merges_sql())
 def q137_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.createDataFrame(
-        _bpe_rules(spark, sf_dir), _BPE_RULES_SCHEMA
+    return local_frame(
+        spark, _bpe_rules(spark, sf_dir), _BPE_RULES_SCHEMA
     ).orderBy("merge_rank")
 
 

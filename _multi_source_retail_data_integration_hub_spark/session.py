@@ -6,15 +6,49 @@ multi-executor cluster: AQE on (runtime join selection, partition
 coalescing, skew-join splitting), UTC session timezone (the reference
 strips timezones before load — /root/reference/etl/load.py:223-225),
 Arrow enabled for the few Pandas-UDF paths.
+
+Shuffle width comes in two parts (SCALE.md "Shuffle sizing"):
+
+- ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` — the
+  width every AQE batch plan starts from and coalesces down:
+  ``$SPARK_SHUFFLE_PARTITIONS``, default 32.
+- ``spark.sql.shuffle.partitions`` — the width of shuffles AQE never
+  sees, chiefly stateful streaming, where each partition is a state
+  store with its own delta and checkpoint files per batch: the core
+  count. A streaming checkpoint keeps the partition count it recorded
+  at its first batch, so existing checkpoints restart unchanged.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+
+
+def session_conf() -> dict[str, str]:
+    """The SQL confs ``get_spark`` starts every session with."""
+    return {
+        "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": os.environ.get(
+            "SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS
+        ),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": "64MB",
+        # a join whose keys are a SUPERSET of a bucketed scan's keys
+        # (the subsplit candidate join adds a salt derived per row) is
+        # already co-located — don't force a re-shuffle on all keys.
+        # Semantics-preserving: Spark only skips the Exchange when the
+        # existing hash partitioning is a subset of the join keys.
+        "spark.sql.requireAllClusterKeysForCoPartition": "false",
+    }
 
 
 def get_spark(app_name: str = "retail_hub_spark", extra_conf: dict | None = None) -> SparkSession:
@@ -22,27 +56,39 @@ def get_spark(app_name: str = "retail_hub_spark", extra_conf: dict | None = None
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        # a join whose keys are a SUPERSET of a bucketed scan's keys
-        # (the subsplit candidate join adds a salt derived per row) is
-        # already co-located — don't force a re-shuffle on all keys.
-        # Semantics-preserving: Spark only skips the Exchange when the
-        # existing hash partitioning is a subset of the join keys.
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**session_conf(), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """A DataFrame over a few driver-side rows whose scans stay in the JVM.
+
+    ``spark.createDataFrame(list)`` puts PySpark's identity-map
+    ``PythonRDD`` in the frame's lineage, so every scan of it starts
+    Python workers. Here the rows travel as one ``pyarrow.Table`` that
+    the JVM decodes itself. Rows may be tuples, Rows or dicts (nested
+    structs likewise); values convert exactly as ``createDataFrame``
+    converts them, naive datetimes included (``toInternal``).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    columns = zip(*internal) if internal else ([] for _ in arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def cluster_conf(
@@ -80,6 +126,7 @@ def cluster_conf(
         "spark.shuffle.service.enabled": "true",
         # shuffle sizing + adaptive re-planning (SCALE.md)
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(shuffle_partitions),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",

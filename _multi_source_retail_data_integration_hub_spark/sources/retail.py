@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
+from ..session import local_frame
 
 RETAIL_SOURCE_NAME = "kaggle_retail_sales"
 API_SOURCE_NAME = "fakestore_api"
@@ -41,10 +42,10 @@ def products_from_records(spark: SparkSession, records: list[dict], extracted_at
     flattening it with column expressions — the Spark-native version of
     the reference's dict-comprehension flatten (etl/extract.py:80-83).
 
-    Goes straight through ``createDataFrame`` with the explicit schema:
+    Goes straight through ``local_frame`` with the explicit schema:
     no temp file (a driver-local path would be unreadable by executors
     in cluster mode, and leaked files accumulate)."""
-    df = spark.createDataFrame(records, schemas.API_PRODUCTS_JSON)
+    df = local_frame(spark, records, schemas.API_PRODUCTS_JSON)
     return _flatten_products(df, extracted_at)
 
 
@@ -70,7 +71,7 @@ def _flatten_products(df: DataFrame, extracted_at=None) -> DataFrame:
 def categories_from_list(spark: SparkSession, categories: list[str]) -> DataFrame:
     """Scalar category list -> single-column DataFrame (S3,
     etl/extract.py:103-123)."""
-    return spark.createDataFrame([(c,) for c in categories], "category string")
+    return local_frame(spark, [(c,) for c in categories], "category string")
 
 
 def fetch_products_rest(spark: SparkSession, url: str, timeout: int = 30, extracted_at=None) -> DataFrame:

@@ -22,6 +22,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # table -> partition columns (fact partitioned for date pruning)
 PARTITIONED_TABLES = {"fact_sales": ("date_key",)}
 
@@ -311,7 +313,8 @@ def append_run_log(
 ) -> None:
     """S10: audit-log append (etl/mysql_staging.py:98-109 +
     dags/retail_etl_dag.py:480-485's JSON run report)."""
-    row = spark.createDataFrame(
+    row = local_frame(
+        spark,
         [(run_id, status, rows_extracted, rows_loaded, float(duration_seconds), None)],
         RUN_LOG_SCHEMA,
     ).withColumn("completed_at", F.current_timestamp())

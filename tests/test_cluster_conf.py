@@ -13,6 +13,12 @@ def test_profile_formulas():
     # shuffle partitions ~2-3x total cores (SCALE.md "Shuffle sizing")
     total_cores = 1000 * 8
     assert 2 * total_cores <= int(conf["spark.sql.shuffle.partitions"]) <= 3 * total_cores
+    # AQE batch plans start from initialPartitionNum, not
+    # shuffle.partitions, so both keys carry the cluster width
+    assert (
+        conf["spark.sql.adaptive.coalescePartitions.initialPartitionNum"]
+        == conf["spark.sql.shuffle.partitions"]
+    )
     assert conf["spark.sql.adaptive.enabled"] == "true"
     assert conf["spark.sql.adaptive.skewJoin.enabled"] == "true"
     assert conf["spark.sql.autoBroadcastJoinThreshold"] == "64MB"
@@ -42,9 +48,11 @@ def test_profile_applies_to_live_session(spark):
         # anything skipped must be a submit-time resource key, never a
         # spark.sql.* runtime conf
         assert all(not k.startswith("spark.sql.") for k in skipped), skipped
-        assert spark.conf.get("spark.sql.shuffle.partitions") == conf[
-            "spark.sql.shuffle.partitions"
-        ]
+        for k in (
+            "spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        ):
+            assert spark.conf.get(k) == conf[k] == "80", k
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
         assert (
             spark.conf.get("spark.sql.files.maxPartitionBytes")

@@ -58,24 +58,24 @@ def test_window_protocol_layout():
     fingerprint twin pinned at exactly position 50 — a refactor of
     _ordered() that silently moves either breaks the bracket
     inference. Round-11 rotation (r10 verdict ask #1): the per-table
-    guards stay retired PAST the window; round-14 rotation (after
-    CORRECTNESS_r13 scored the r9 block + q179-q186): the remainder of
-    the r10 block (q23_minhash_signatures onward — now the oldest
-    driver rows) leads the backfill; no new registrations this round,
-    so the window is guard + 48 backfill names + tail guard."""
+    guards stay retired PAST the window; round-15 rotation (after
+    CORRECTNESS_r14 scored the r10 block remainder + q01-q06): the r11
+    block (q07_catalog_stats onward — now the oldest driver rows)
+    leads the backfill; no new registrations this round, so the window
+    is guard + 48 backfill names + tail guard."""
     names = list(entry.queries())
     assert names[0] == "q000_generation_fingerprint"
     assert names[49] == "q997_generation_fingerprint_tail"
     # retired guards stay registered but OUTSIDE the recorded window
     for g in entry._RETIRED_GUARDS:
         assert names.index(g) > 49, f"{g} must sit past the window"
-    # the r10 block remainder leads the backfill and lands in the
-    # window (structural, so adding a new query never silently
-    # displaces the oldest rows)
-    carries = ["q23_minhash_signatures", "q24_lsh_candidates", "q25_simhash"]
+    # the r11 block leads the backfill and lands in the window
+    # (structural, so adding a new query never silently displaces the
+    # oldest rows)
+    carries = ["q07_catalog_stats", "q08_quarterly_yoy", "q27_lsh_buckets"]
     assert entry._BACKFILL[:3] == carries
     for q in carries:
-        assert names.index(q) < 49, f"{q} must land in the r14 window"
+        assert names.index(q) < 49, f"{q} must land in the r15 window"
     # the leading stale block fits in this window — STRICT: every one
     # of the 48 leading backfill names must be a registered query (a
     # typo or deregistration must fail here, not silently admit a
